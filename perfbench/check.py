@@ -2,14 +2,25 @@
 
 Index workloads compare against ``seekstorm_spark.oracle`` — exact
 top-10 (docid, f32 score) lists and match counts over the doc store's
-docid→text. The operator suite compares against its DuckDB oracle SQL.
-Expected answers are computed outside every timed window and cached
-under ``perfbench/.cache``, keyed by a hash of the inputs they answer
-and of the oracle's code.
+docid→text. The oracle shares its tokenizer, BM25 and length
+quantization with the engine, so a change there would move the engine
+and its oracle together. Every oracle answer is therefore checked
+against an independent reference written here from the documented
+semantics (float64 BM25, ``REF_TOL``); where the two disagree the
+reference's answer is the expected one. Highlight fragments come from
+the reference alone. The operator suite compares against its DuckDB
+oracle SQL.
 
-This module binds the oracle's and highlighter's functions at import
-time, before the traced run patches the library, so computing an
-expected answer never records a span.
+Expected answers are computed outside every timed window, in a child
+process (so their memory never counts in the run's peak), and cached
+under ``perfbench/.cache`` keyed by a hash of the inputs they answer,
+``oracle.py`` and this file — not of the engine modules the oracle
+imports, so answers computed on one commit still hold a later one to
+them.
+
+This module binds the oracle's functions at import time, before the
+traced run patches the library, so computing an expected answer never
+records a span.
 """
 
 from __future__ import annotations
@@ -18,17 +29,15 @@ import hashlib
 import json
 import os
 import pickle
+import re
 
 import numpy as np
 
-from seekstorm_spark.functions.highlight import kwic_fragment_py
 from seekstorm_spark.oracle import build_oracle_index, search_oracle
-from seekstorm_spark.tokenizer import parse_query
 
-SCORE_ABS_TOL = 1e-5  # the tolerance the repo's oracle tests use
-
-
-_ORACLE_SOURCES = ("oracle.py", "tokenizer.py", "scoring.py", "quantization.py")
+SCORE_ABS_TOL = 1e-5  # engine vs expected: the tolerance the repo's oracle tests use
+REF_TOL = 1e-4  # oracle (f32) vs the float64 reference
+HIGHLIGHT_WIDTH = 30
 
 
 def digest(obj) -> str:
@@ -37,30 +46,36 @@ def digest(obj) -> str:
     ).hexdigest()
 
 
-def oracle_source_digest() -> str:
-    """Hash of the oracle's own code: expected answers cached under an
-    older oracle are never reused."""
+def _code_digest() -> str:
     import seekstorm_spark
 
-    base = os.path.dirname(seekstorm_spark.__file__)
     h = hashlib.sha256()
-    for name in _ORACLE_SOURCES:
-        with open(os.path.join(base, name), "rb") as f:
+    for path in (os.path.join(os.path.dirname(seekstorm_spark.__file__), "oracle.py"),
+                 os.path.abspath(__file__)):
+        with open(path, "rb") as f:
             h.update(f.read())
     return h.hexdigest()
 
 
-def cached(cache_dir: str, kind: str, inputs: dict, compute):
-    """``compute()`` memoised on disk under a hash of everything the
-    answer depends on: the inputs themselves (texts, queries, tables)
-    and the oracle's code."""
+def cached(cache_dir: str, kind: str, inputs: dict, compute, *args, pause=None):
+    """``compute(*args)`` memoised on disk under a hash of ``inputs``
+    and of the oracle's and this file's code. A miss computes in a
+    spawned child process, with ``pause`` (a context manager, e.g. the
+    memory sampler's) held around it."""
+    import contextlib
+    import multiprocessing
+    from concurrent.futures import ProcessPoolExecutor
+
     os.makedirs(cache_dir, exist_ok=True)
-    h = digest({"inputs": inputs, "oracle": oracle_source_digest()})[:32]
+    h = digest({"inputs": inputs, "code": _code_digest()})[:32]
     path = os.path.join(cache_dir, f"{kind}-{h}.pkl")
     if os.path.exists(path):
         with open(path, "rb") as f:
             return pickle.load(f)
-    val = compute()
+    with pause or contextlib.nullcontext(), ProcessPoolExecutor(
+        1, mp_context=multiprocessing.get_context("spawn")
+    ) as pool:
+        val = pool.submit(compute, *args).result()
     tmp = path + ".tmp"
     with open(tmp, "wb") as f:
         pickle.dump(val, f)
@@ -80,29 +95,129 @@ def read_doc_store_texts(path: str) -> dict[int, str]:
 
 def expected_topk(
     texts: dict[int, str], queries: list[tuple[str, str]], top_k: int = 10,
-    deleted: frozenset[int] = frozenset(),
+    deleted: frozenset[int] = frozenset(), highlight: bool = False,
 ) -> list[dict]:
-    """Oracle answers for (query, default_type) pairs. Deleted docids
-    stay in the statistics (the engine filters deletes at query time)
-    and drop out of the ranking."""
+    """Answers for (query, default_type) pairs: the oracle's top-k and
+    match count where the reference agrees, else the reference's.
+    Deleted docids stay in the statistics (the engine filters deletes
+    at query time) and drop out of the ranking. With ``highlight`` each
+    answer also holds the fragment of every hit."""
     idx = build_oracle_index(texts)
+    ref = Reference(texts)
     out = []
     for q, dt in queries:
         top, count = search_oracle(idx, q, top_k + len(deleted), dt)
         top = [(d, s) for d, s in top if d not in deleted][:top_k]
-        out.append({"top": top, "count": count})
+        want, want_count, scores = ref.search(q, dt, top_k, deleted)
+        agree = count == want_count and len(top) == len(want) and all(
+            abs(s - ws) <= REF_TOL and (d == wd or abs(scores.get(d, np.inf) - ws) <= REF_TOL)
+            for (d, s), (wd, ws) in zip(top, want)
+        )
+        if not agree:
+            top, count = [(d, float(np.float32(s))) for d, s in want], want_count
+        ans = {"top": top, "count": count, "oracle_agrees": agree}
+        if highlight:
+            terms = query_terms(q)
+            ans["fragments"] = [kwic_reference(texts[d], terms) for d, _ in top]
+        out.append(ans)
     return out
-
-
-def expected_fragments(texts: dict[int, str], query: str, docids: list[int]) -> list[str]:
-    terms = [t.term for t in parse_query(query).positive_terms]
-    return [kwic_fragment_py(texts.get(d, ""), terms, 30) for d in docids]
 
 
 def same_topk(got: list[tuple[int, float]], want: list[tuple[int, float]]) -> bool:
     return [d for d, _ in got] == [d for d, _ in want] and all(
         abs(g - w) <= SCORE_ABS_TOL for (_, g), (_, w) in zip(got, want)
     )
+
+
+# ---------------------------------------------------------------------------
+# the independent reference (the benchmark's query forms only)
+# ---------------------------------------------------------------------------
+
+# Tokens (unicode_alphanumeric on lowercased text): a word character,
+# then word characters and + - #; everything else separates tokens.
+_TOKEN = re.compile(r"\w[\w+#-]*")
+BM25_K1, BM25_B = 1.2, 0.75
+
+
+def quantized_length(n: int) -> int:
+    """A token count after the SmallFloat byte4 round trip the index
+    stores: counts below 24 are exact; above, ``n - 24`` keeps its four
+    most significant bits."""
+    if n < 24:
+        return n
+    m = n - 24
+    shift = max(m.bit_length() - 4, 0)
+    return 24 + ((m >> shift) << shift)
+
+
+def query_terms(query: str) -> list[str]:
+    """The positive terms of a query, in order."""
+    return [c.strip('"+').lower() for c in query.split() if not c.startswith("-")]
+
+
+class Reference:
+    """BM25 over ``texts`` in float64: idf = ln((N - df + .5)/(df + .5) + 1),
+    tf·(k1+1)/(tf + k1·(1 - b + b·dl/avgdl)) with dl the quantized
+    token count and avgdl the mean of the quantized counts; ties broken
+    by ascending docid."""
+
+    def __init__(self, texts: dict[int, str]):
+        self.pos: dict[str, dict[int, list[int]]] = {}
+        self.dl: dict[int, int] = {}
+        for d, text in texts.items():
+            toks = _TOKEN.findall(text.lower())
+            self.dl[d] = quantized_length(len(toks))
+            for i, t in enumerate(toks):
+                self.pos.setdefault(t, {}).setdefault(d, []).append(i)
+        self.n = len(texts)
+        self.avgdl = sum(self.dl.values()) / self.n if self.n else 1.0
+
+    def _matches(self, query: str, default_type: str) -> set[int]:
+        chunks = query.split()
+        terms = query_terms(query)
+        docs = [set(self.pos.get(t, {})) for t in terms]
+        if query.startswith('"') and query.endswith('"'):
+            hit = set.intersection(*docs)
+            return {d for d in hit if any(
+                all(p + k in self.pos[t][d] for k, t in enumerate(terms))
+                for p in self.pos[terms[0]][d])}
+        required = default_type == "intersection" or any(c.startswith("+") for c in chunks)
+        hit = set.intersection(*docs) if required else set().union(*docs)
+        for c in chunks:
+            if c.startswith("-"):
+                hit -= set(self.pos.get(c[1:].lower(), {}))
+        return hit
+
+    def search(self, query: str, default_type: str, top_k: int,
+               deleted: frozenset[int] = frozenset()):
+        """(top-k [(docid, score)], match count, docid → score of every match)."""
+        hit = self._matches(query, default_type)
+        scores = dict.fromkeys(hit, 0.0)
+        for t in dict.fromkeys(query_terms(query)):
+            post = self.pos.get(t, {})
+            idf = np.log((self.n - len(post) + 0.5) / (len(post) + 0.5) + 1.0)
+            for d in hit:
+                tf = len(post.get(d, ()))
+                if tf:
+                    norm = BM25_K1 * (1 - BM25_B + BM25_B * self.dl[d] / self.avgdl)
+                    scores[d] += idf * tf * (BM25_K1 + 1) / (tf + norm)
+        ranked = sorted((d for d in hit if d not in deleted), key=lambda d: (-scores[d], d))
+        return [(d, scores[d]) for d in ranked[:top_k]], len(hit), scores
+
+
+def kwic_reference(text: str, terms: list[str], width: int = HIGHLIGHT_WIDTH) -> str:
+    """The KWIC fragment the server returns: ``width`` characters either
+    side of the first whole-word, case-insensitive occurrence of the
+    first query term the text contains, with every query term inside
+    the fragment wrapped in <b>…</b> (original case kept)."""
+    for term in terms:
+        m = re.search(rf"\b{re.escape(term)}\b", text, re.IGNORECASE)
+        if m is None:
+            continue
+        frag = text[max(m.start() - width, 0):m.end() + width]
+        words = "|".join(re.escape(t) for t in terms)
+        return re.sub(rf"\b({words})\b", r"<b>\1</b>", frag, flags=re.IGNORECASE)
+    return ""
 
 
 # ---------------------------------------------------------------------------

@@ -137,25 +137,40 @@ def fresh_docs(seed: int, n: int) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
-# operator-suite tables (the column layout of the sf test tables, scaled)
+# operator-suite tables
 # ---------------------------------------------------------------------------
+# The repo's sf0.1 test tables, regenerated from the seed: the same
+# columns, row counts and per-column distributions (measured on sf0.1;
+# README.md "operators" holds the comparison). The run reads only its
+# own checkout, so it cannot open the fixed files themselves.
 
 _WORDS = (
     "spark window merge table column vector stream value data small join "
     "filter big group hash customer sort order slow line part fast row the "
     "agg key query a scan batch"
 ).split()
-_LANGS = ["en", "en", "en", "zh", "es", "fr", "de"]
+_LANGS = ["en", "zh", "es", "fr", "de"]
+_LANG_P = [0.40, 0.15, 0.15, 0.15, 0.15]
 _EVENT_TYPES = ["signup", "purchase", "view", "click", "error"]
 OPERATOR_TABLES = ("documents", "embeddings", "lineitem", "events")
+# sf0.1 row counts
+SF01_ROWS = {"documents": 5000, "embeddings": 2000, "lineitem": 600_000, "events": 100_000}
 
 
-def write_operator_tables(
-    out_dir: str, seed: int, n_docs: int, n_vecs: int, n_lineitem: int,
-    n_events: int,
-) -> None:
-    """documents / embeddings / lineitem / events parquet in the
-    column layout the headline queries read."""
+def write_operator_tables(out_dir: str, seed: int, rows: dict[str, int]) -> None:
+    """documents / embeddings / lineitem / events parquet with
+    ``rows[table]`` rows each, distributed as in sf0.1:
+
+    - documents: 10–99 tokens drawn uniformly from a 30-word
+      vocabulary; 5 % get the rare term "dup" appended; one doc in 625 is an
+      exact copy of another; lang 40 % en, 15 % each zh/es/fr/de;
+      source cycles through 20 values.
+    - embeddings: 64-d unit vectors, 10 labels.
+    - lineitem: TPC-H-style uniform keys (orderkey < rows/4, 20k parts,
+      1k suppliers), prices 900–105k, ship dates over 2499 days.
+    - events: 30 days of sorted timestamps, 1500 users, 5 types,
+      exponential values with mean 50.
+    """
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -163,73 +178,62 @@ def write_operator_tables(
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng([seed, 4])
 
-    texts = []
-    lens = rng.integers(8, 100, n_docs)
-    for i in range(n_docs):
-        words = [_WORDS[j] for j in rng.integers(0, len(_WORDS), lens[i])]
-        if rng.random() < 0.05:
-            words.append("dup")
-        texts.append(" ".join(words))
-    # exact duplicates for dedup_exact_groups
-    for i in rng.choice(np.arange(1, n_docs), size=max(n_docs // 600, 2), replace=False):
-        texts[int(i)] = texts[int(i) - 1]
-    docs = pd.DataFrame(
-        {
-            "doc_id": np.arange(n_docs, dtype=np.int64),
-            "text": texts,
-            "lang": [_LANGS[j] for j in rng.integers(0, len(_LANGS), n_docs)],
-            "source": [f"src{j}" for j in rng.integers(0, 20, n_docs)],
-            "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
-        }
-    )
+    n = rows["documents"]
+    words = np.array(_WORDS)
+    texts = [
+        " ".join(words[rng.integers(0, len(words), k)]) + (" dup" if rng.random() < 0.05 else "")
+        for k in rng.integers(10, 100, n)
+    ]
+    for _ in range(max(n // 625, 1)):
+        i, j = rng.choice(n, size=2, replace=False)
+        texts[int(i)] = texts[int(j)]
+    docs = pd.DataFrame({
+        "doc_id": np.arange(n, dtype=np.int64),
+        "text": texts,
+        "lang": np.array(_LANGS)[rng.choice(len(_LANGS), n, p=_LANG_P)],
+        "source": [f"src{i % 20}" for i in range(n)],
+        "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
+    })
     pq.write_table(pa.Table.from_pandas(docs, preserve_index=False),
                    f"{out_dir}/documents.parquet")
 
-    emb = rng.standard_normal((n_vecs, 64)).astype(np.float32) * 0.1
+    n = rows["embeddings"]
+    emb = rng.standard_normal((n, 64))
+    emb = (emb / np.linalg.norm(emb, axis=1, keepdims=True)).astype(np.float32)
     pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array(np.arange(n_vecs, dtype=np.int64)),
-                "embedding": pa.FixedSizeListArray.from_arrays(
-                    pa.array(emb.ravel()), 64
-                ).cast(pa.list_(pa.float32())),
-                "label": pa.array(rng.integers(0, 5, n_vecs).astype(np.int32)),
-            }
-        ),
+        pa.table({
+            "vec_id": pa.array(np.arange(n, dtype=np.int64)),
+            "embedding": pa.FixedSizeListArray.from_arrays(
+                pa.array(emb.ravel()), 64).cast(pa.list_(pa.float32())),
+            "label": pa.array(rng.integers(0, 10, n).astype(np.int32)),
+        }),
         f"{out_dir}/embeddings.parquet",
     )
 
-    n = n_lineitem
-    ship = np.datetime64("1992-01-01") + rng.integers(0, 3650, n).astype("timedelta64[D]")
-    li = pa.table(
-        {
-            "l_orderkey": rng.integers(1, max(n // 4, 2), n),
-            "l_partkey": rng.integers(1, 20000, n),
-            "l_suppkey": rng.integers(1, 1000, n),
-            "l_linenumber": rng.integers(1, 8, n).astype(np.int32),
-            "l_quantity": rng.integers(1, 51, n).astype(np.float64),
-            "l_extendedprice": np.round(rng.uniform(900, 105000, n), 2),
-            "l_discount": rng.integers(0, 11, n) / 100.0,
-            "l_tax": rng.integers(0, 9, n) / 100.0,
-            "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, n)]),
-            "l_linestatus": pa.array(np.array(["F", "O"])[rng.integers(0, 2, n)]),
-            "l_shipdate": pa.array(ship.astype("datetime64[us]")),
-        }
-    )
-    pq.write_table(li, f"{out_dir}/lineitem.parquet")
+    n = rows["lineitem"]
+    ship = np.datetime64("1995-01-02") + rng.integers(0, 2499, n).astype("timedelta64[D]")
+    pq.write_table(pa.table({
+        "l_orderkey": rng.integers(0, max(n // 4, 1), n),
+        "l_partkey": rng.integers(0, 20000, n),
+        "l_suppkey": rng.integers(0, 1000, n),
+        "l_linenumber": rng.integers(1, 8, n).astype(np.int32),
+        "l_quantity": rng.integers(1, 51, n).astype(np.float64),
+        "l_extendedprice": np.round(rng.uniform(900, 105000, n), 2),
+        "l_discount": rng.integers(0, 11, n) / 100.0,
+        "l_tax": rng.integers(0, 9, n) / 100.0,
+        "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, n)]),
+        "l_linestatus": pa.array(np.array(["F", "O"])[rng.integers(0, 2, n)]),
+        "l_shipdate": pa.array(ship.astype("datetime64[us]")),
+    }), f"{out_dir}/lineitem.parquet")
 
-    m = n_events
+    n = rows["events"]
     ts = np.datetime64("2024-01-01T00:00:00") + np.sort(
-        rng.integers(0, 90 * 86400 * 10**6, m)
-    ).astype("timedelta64[us]")
-    ev = pa.table(
-        {
-            "event_id": np.arange(m, dtype=np.int64),
-            "ts": pa.array(ts),
-            "user_id": rng.integers(0, 2000, m),
-            "event_type": pa.array(np.array(_EVENT_TYPES)[rng.integers(0, 5, m)]),
-            "value": np.round(rng.uniform(0, 200, m), 2),
-            "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, m)]),
-        }
-    )
-    pq.write_table(ev, f"{out_dir}/events.parquet")
+        rng.integers(0, 30 * 86400 * 10**6, n)).astype("timedelta64[us]")
+    pq.write_table(pa.table({
+        "event_id": np.arange(n, dtype=np.int64),
+        "ts": pa.array(ts),
+        "user_id": rng.integers(0, 1500, n),
+        "event_type": pa.array(np.array(_EVENT_TYPES)[rng.integers(0, 5, n)]),
+        "value": np.round(rng.exponential(50.0, n), 2),
+        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n)]),
+    }), f"{out_dir}/events.parquet")

@@ -65,6 +65,7 @@ class Ctx:
         self.index_sizes: dict = {}
         self.host: dict = {}
         self.steal_gate: dict = {}
+        self.jvm_bytes = 0  # jvm_live_bytes at the end of the window
         self.files_added: list[int] = []
 
     def before_window(self):
@@ -74,9 +75,12 @@ class Ctx:
         self._cpu0 = cpu_totals()
 
     def after_window(self):
-        from spans import cpu_totals, host_usage
+        from spans import cpu_totals, host_usage, jvm_live_bytes
 
         self.host = host_usage(self._cpu0, cpu_totals())
+        # memory counts set-up and window, not the checks that follow
+        self.mem.stop()
+        self.jvm_bytes = jvm_live_bytes(self.spark.sparkContext)
 
 
 def _launcher_env(ctx: Ctx) -> None:
@@ -306,6 +310,7 @@ def main(argv=None) -> int:
         spans.instrument(tracer)
 
     with spans.MemSampler() as mem:
+        ctx.mem = mem
         try:
             run = workloads.WORKLOADS[args.workload](ctx)
         finally:
@@ -317,7 +322,7 @@ def main(argv=None) -> int:
         metrics, ledger = per_layer(ctx, run, tracer, counters, units)
     else:
         metrics = {"setup_s": run.setup_s, **run.e2e(),
-                   "peak_mem_mb": mem.peak_bytes / 1e6}
+                   "mem_mb": (mem.peak_bytes + ctx.jvm_bytes) / 1e6}
     if set(metrics) != set(units):
         raise RuntimeError(
             f"measured metrics {sorted(set(metrics) ^ set(units))} do not "
@@ -327,7 +332,8 @@ def main(argv=None) -> int:
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": int(ctx.trace), "smoke": args.smoke, "cpus": ctx.cpus,
         "metrics": metrics, "setup_s": run.setup_s, "e2e": run.e2e(),
-        "peak_mem_mb": mem.peak_bytes / 1e6, "rounds_s": run.rounds,
+        "python_peak_mb": mem.peak_bytes / 1e6, "jvm_live_mb": ctx.jvm_bytes / 1e6,
+        "rounds_s": run.rounds,
         "throughput_per_s": run.throughput,
         "peak_mem_parts_mb": {k: v / 1e6 for k, v in mem.peak_parts.items()},
         "host": ctx.host, "steal_gate": ctx.steal_gate, "extra": run.extra,

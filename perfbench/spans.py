@@ -277,7 +277,7 @@ def host_usage(a: tuple[int, int, int], b: tuple[int, int, int]) -> dict:
     }
 
 
-def wait_out_steal(limit_pct: float = 5.0, max_wait_s: float = 20.0) -> dict:
+def wait_out_steal(limit_pct: float = 2.0, max_wait_s: float = 30.0) -> dict:
     """Sample steal over 1 s windows until it reads below ``limit_pct``
     or ``max_wait_s`` has passed; the samples go into the run record
     either way."""
@@ -293,18 +293,36 @@ def wait_out_steal(limit_pct: float = 5.0, max_wait_s: float = 20.0) -> dict:
                     "waited_s": round(waited, 2)}
 
 
+def jvm_live_bytes(sc) -> int:
+    """Bytes the JVM holds after a full collection: live heap, non-heap
+    (metaspace, code cache) and direct buffers. The JVM's resident size
+    is no measure of this; it follows when the collector chose to grow
+    the heap."""
+    jvm = sc._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    jvm.java.lang.System.gc()
+    mem = mf.getMemoryMXBean()
+    total = mem.getHeapMemoryUsage().getUsed() + mem.getNonHeapMemoryUsage().getUsed()
+    pools = jvm.java.lang.Class.forName("java.lang.management.BufferPoolMXBean")
+    for pool in mf.getPlatformMXBeans(pools):
+        total += pool.getMemoryUsed()
+    return int(total)
+
+
 class MemSampler:
-    """Peak memory of this process and all its descendants (the JVM and
-    its Python workers), sampled on a background thread. Each process
-    counts its proportional set size (PSS: resident pages, shared pages
-    split among the processes sharing them), so forked Python workers do
-    not count the pages they share with their parent over and over."""
+    """Peak memory of this process and its Python descendants (the
+    JVM's Python workers), sampled on a background thread; the JVM is
+    read by jvm_live_bytes. Each process counts its proportional set
+    size (PSS: resident pages, shared pages split among the processes
+    sharing them), so forked Python workers do not count the pages they
+    share with their parent over and over."""
 
     def __init__(self, interval_s: float = 0.2):
         self.interval_s = interval_s
         self.peak_bytes = 0
         self.peak_parts: dict[str, int] = {}  # process name → bytes at the peak
         self._stop = threading.Event()
+        self._paused = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
     @staticmethod
@@ -341,10 +359,23 @@ class MemSampler:
                 parts[name] = parts.get(name, 0) + self._pss(pid)
         return parts
 
+    @contextlib.contextmanager
+    def paused(self):
+        """No samples while the block runs (the benchmark's own oracle
+        work, in a child process that has exited when it ends)."""
+        self._paused.set()
+        try:
+            yield
+        finally:
+            self._paused.clear()
+
     def _loop(self):
         while not self._stop.is_set():
+            if self._paused.is_set():
+                self._stop.wait(self.interval_s)
+                continue
             parts = self._tree_bytes()
-            total = sum(parts.values())
+            total = sum(v for k, v in parts.items() if k != "java")
             if total > self.peak_bytes:
                 self.peak_bytes, self.peak_parts = total, parts
             self._stop.wait(self.interval_s)
@@ -353,6 +384,9 @@ class MemSampler:
         self._thread.start()
         return self
 
-    def __exit__(self, *exc):
+    def stop(self) -> None:
         self._stop.set()
         self._thread.join()
+
+    def __exit__(self, *exc):
+        self.stop()

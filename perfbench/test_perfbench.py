@@ -143,6 +143,66 @@ def test_gate_flags_a_perturbed_expected_answer():
     assert not check.same_topk(got, swapped)
 
 
+_NOISY = {0: "term00001 Term00002 term00001 c++ don't", 1: "term00002 e-mail term00003",
+          2: "term00001 term00003 term00003 " + "term00009 " * 40, 3: "term00004 42",
+          4: "term00003 term00001 term00002 Mixed-Case"}
+_QUERIES = [("term00001 term00003", "union"), ("term00001 term00003", "intersection"),
+            ("+term00001 +term00002", "union"), ("term00001 -term00002", "union"),
+            ('"term00001 term00002"', "union"), ('"term00003 term00001 term00002"', "union"),
+            ("term00004", "union"), ("term00009", "union")]
+
+
+def test_reference_agrees_with_the_oracle():
+    import check
+    from seekstorm_spark.oracle import build_oracle_index, search_oracle
+    from seekstorm_spark.quantization import quantize_length
+
+    assert all(check.quantized_length(n) == quantize_length(n) for n in range(70_000))
+    idx = build_oracle_index(_NOISY)
+    ref = check.Reference(_NOISY)
+    for q, dt in _QUERIES:
+        top, count = search_oracle(idx, q, 10, dt)
+        want, want_count, _ = ref.search(q, dt, 10)
+        assert count == want_count, q
+        assert [d for d, _ in top] == [d for d, _ in want], q
+        assert all(abs(a - b) < check.REF_TOL for (_, a), (_, b) in zip(top, want)), q
+    assert all(a["oracle_agrees"] for a in check.expected_topk(_NOISY, _QUERIES))
+
+
+def test_reference_overrules_a_changed_oracle(monkeypatch):
+    """A scoring change shared by the engine and its oracle must not move
+    the expected answers: they fall back to the independent reference."""
+    import check
+    import seekstorm_spark.oracle as oracle
+
+    real = check.expected_topk(_NOISY, _QUERIES)
+    score = oracle.bm25_term_scores
+    monkeypatch.setattr(oracle, "bm25_term_scores", lambda *a, **k: score(*a, **k) * 1.01)
+    changed = check.expected_topk(_NOISY, _QUERIES)
+    assert not all(a["oracle_agrees"] for a in changed)
+    for r, c in zip(real, changed):
+        assert check.same_topk(c["top"], r["top"])
+
+
+def test_highlight_reference():
+    import check
+
+    text = "Alpha beta term00001 gamma term00002 delta term00001x Term00002"
+    assert check.kwic_reference(text, ["term00002", "term00001"], width=6) == (
+        "gamma <b>term00002</b> delta")
+    assert check.kwic_reference(text, ["term00001", "term00002"], width=6) == (
+        " beta <b>term00001</b> gamma")
+    assert check.kwic_reference(text, ["zzz"]) == ""
+    assert check.query_terms('"term00001 Term00002"') == ["term00001", "term00002"]
+    assert check.query_terms("+a -b c") == ["a", "c"]
+    from seekstorm_spark.functions.highlight import kwic_fragment_py
+
+    for t in _NOISY.values():
+        for q, _ in _QUERIES:
+            terms = check.query_terms(q)
+            assert check.kwic_reference(t, terms) == kwic_fragment_py(t, terms, 30)
+
+
 def test_gate_flags_a_perturbed_operator_answer():
     import pandas as pd
 

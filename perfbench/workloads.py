@@ -20,18 +20,16 @@ import inputs
 SIZES = {
     "serve": {"docs": 2000, "singles": 32, "batch": 100},
     "write": {"batch_docs": 50, "deletes": 10, "queries": 2},
-    "operators": {"docs": 3000, "vecs": 1500, "lineitem": 100_000, "events": 50_000},
+    "operators": inputs.SF01_ROWS,
 }
 SMOKE_SIZES = {
     "serve": {"docs": 300, "singles": 8, "batch": 16},
     "write": {"batch_docs": 20, "deletes": 5, "queries": 2},
-    "operators": {"docs": 300, "vecs": 200, "lineitem": 2000, "events": 2000},
+    "operators": {"documents": 300, "embeddings": 200, "lineitem": 2000, "events": 2000},
 }
 
 
 INDEX = "pb"
-MAX_WINDOWS = 2
-STEAL_REJECT_PCT = 2.0
 
 
 class Run:
@@ -56,7 +54,7 @@ class Run:
     def e2e(self) -> dict:
         """op_p50_s: median over the window's rounds of the mean
         operation latency in the round (a round holds every operation
-        kind of the mix once)."""
+        kind of the mix once; a window holds one round or more)."""
         rounds = [statistics.mean(r) for r in self.rounds if r]
         return {"op_p50_s": statistics.median(rounds) if rounds else 0.0}
 
@@ -64,13 +62,8 @@ class Run:
 def _session(ctx):
     from seekstorm_spark.session import get_spark
 
-    # the heap is committed and touched at start (Xms = Xmx), as in a
-    # production JVM, so peak_mem_mb follows the memory the program adds
-    # rather than when G1 happened to grow the heap
-    heap = os.environ["SPARK_DRIVER_MEM"]
     conf = {
-        "spark.driver.extraJavaOptions":
-            f"-Djava.io.tmpdir={ctx.tmp_dir} -Xms{heap} -XX:+AlwaysPreTouch",
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={ctx.tmp_dir}",
         "spark.ui.showConsoleProgress": "false",
     }
     if ctx.trace:
@@ -87,6 +80,7 @@ def _session(ctx):
         )
     if ctx.trace:
         ctx.tracer.sc = spark.sparkContext
+    ctx.spark = spark
     return spark
 
 
@@ -172,25 +166,14 @@ def _request(ctx, run: Run, name: str, call, **attrs):
 
 
 def _measure(ctx, run: Run, window) -> None:
-    """Run the timed ``window(w0)``. A window during which hypervisor
-    steal exceeded STEAL_REJECT_PCT measured the host rather than the
-    program: it is kept in the run record under ``rejected_windows`` and
-    measured again, up to MAX_WINDOWS times. Every window's answers are
-    checked."""
-    for attempt in range(MAX_WINDOWS):
-        ctx.before_window()
-        run.rounds, run.throughput = [], []
-        w0 = time.perf_counter()
-        with ctx.tracer.span("run.window") as rec:
-            window(w0)
-        run.extra["window_s"] = time.perf_counter() - w0
-        ctx.after_window()
-        if ctx.host["steal_pct"] < STEAL_REJECT_PCT or attempt == MAX_WINDOWS - 1:
-            return
-        run.extra.setdefault("rejected_windows", []).append(
-            {**ctx.host, "window_s": run.extra["window_s"], **run.e2e()})
-        if rec is not None:
-            rec["name"] = "run.window_rejected"
+    """Wait out a steal phase, then run the timed ``window(w0)`` once;
+    the window's steal and CPU use go into the run record."""
+    ctx.before_window()
+    w0 = time.perf_counter()
+    with ctx.tracer.span("run.window"):
+        window(w0)
+    run.extra["window_s"] = time.perf_counter() - w0
+    ctx.after_window()
 
 
 def _pairs(results: list[dict]) -> list[tuple[int, float]]:
@@ -235,10 +218,7 @@ def serve(ctx) -> Run:
     want = check.cached(
         ctx.cache_dir, "serve",
         {"texts": check.digest(texts), "singles": singles, "batch": batch},
-        lambda: {
-            "singles": check.expected_topk(texts, [(q, dt) for _, q, dt in singles]),
-            "batch": check.expected_topk(texts, [(q, "union") for q in batch]),
-        },
+        _serve_answers, texts, singles, batch, pause=ctx.mem.paused(),
     )
     # rounds of one request per query class, so every round has the
     # same composition; then batches for the rest of the window
@@ -256,7 +236,7 @@ def serve(ctx) -> Run:
                 run.rounds[-1].append(wall)
                 got_singles.append((j, cls, resp))
                 run.extra["rows_returned"] += len((resp or {}).get("results", []))
-        while time.perf_counter() - w0 < ctx.seconds or len(run.throughput) < 3:
+        while not run.throughput or time.perf_counter() - w0 < ctx.seconds:
             wall, resp = _request(ctx, run, "client.query_batch",
                                   lambda: client.query_batch(INDEX, batch, top_k=10))
             run.throughput.append(len(batch) / wall)
@@ -271,9 +251,7 @@ def serve(ctx) -> Run:
         res = resp.get("results", [])
         if not check.same_topk(_pairs(res), exp):
             run.fail(f"serve {cls} {singles[j][1]!r}: {_pairs(res)[:3]} vs {exp[:3]}")
-        elif [r.get("fragment") for r in res] != check.expected_fragments(
-            texts, singles[j][1], [d for d, _ in exp]
-        ):
+        elif [r.get("fragment") for r in res] != want["singles"][j]["fragments"]:
             run.fail(f"serve highlight {singles[j][1]!r}")
     for resp in got_batches:
         if resp is None:
@@ -299,6 +277,14 @@ def serve(ctx) -> Run:
     finally:
         _stop_http(srv, thread)
     return run
+
+
+def _serve_answers(texts, singles, batch) -> dict:
+    return {
+        "singles": check.expected_topk(
+            texts, [(q, dt) for _, q, dt in singles], highlight=True),
+        "batch": check.expected_topk(texts, [(q, "union") for q in batch]),
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -342,14 +328,19 @@ def _write_phase(ctx, run: Run, spark, client, path: str, base_texts: dict) -> N
     want = check.cached(
         ctx.cache_dir, "write",
         {"texts": check.digest(texts), "queries": queries, "deleted": deleted},
-        lambda: check.expected_topk(texts, queries, deleted=frozenset(deleted)),
+        check.expected_topk, texts, queries, 10, frozenset(deleted),
+        pause=ctx.mem.paused(),
     )
     for (q, _), resp, exp in zip(queries, got, want):
         if resp is not None and not check.same_topk(_pairs(resp.get("results", [])), exp["top"]):
             run.fail(f"realtime {q!r}")
     # compacted == a fresh build over the live docs (same docids)
     live = {d: t for d, t in texts.items() if d not in set(deleted)}
-    for (q, dt), exp in zip(queries, check.expected_topk(live, queries)):
+    want_live = check.cached(
+        ctx.cache_dir, "compacted", {"texts": check.digest(live), "queries": queries},
+        check.expected_topk, live, queries, pause=ctx.mem.paused(),
+    )
+    for (q, dt), exp in zip(queries, want_live):
         run.attempted += 1
         res = [(int(r["docid"]), float(r["score"]))
                for r in search(spark, store, q, top_k=10, default_type=dt).collect()]
@@ -410,10 +401,8 @@ def operators(ctx) -> Run:
     t0 = time.perf_counter()
     with tracer.span("run.setup"):
         ctx.spark = _session(ctx)
-        with tracer.span("operators.tables"):
-            inputs.write_operator_tables(
-                table_dir, ctx.seed, sz["docs"], sz["vecs"], sz["lineitem"], sz["events"]
-            )
+        with tracer.span("operators.tables"), ctx.mem.paused():
+            inputs.write_operator_tables(table_dir, ctx.seed, sz)
         one_pass(got)  # warm-up pass (JIT, codegen, Python workers)
     run.setup_s = time.perf_counter() - t0
 
@@ -423,11 +412,12 @@ def operators(ctx) -> Run:
         {"tables": check.file_digest(
             [os.path.join(table_dir, f"{t}.parquet") for t in inputs.OPERATOR_TABLES]),
          "sql": [sql[n] for n in inputs.OPERATOR_QUERIES]},
-        lambda: check.duckdb_answers(table_dir, inputs.OPERATOR_QUERIES),
+        check.duckdb_answers, table_dir, inputs.OPERATOR_QUERIES,
+        pause=ctx.mem.paused(),
     )
 
     def window(w0):
-        while time.perf_counter() - w0 < ctx.seconds or len(run.rounds) < 2:
+        while len(run.rounds) < 2 or time.perf_counter() - w0 < ctx.seconds:
             run.rounds.append([])
             one_pass(got, run.rounds[-1])
 
