@@ -60,11 +60,9 @@ def _code_digest() -> str:
 def cached(cache_dir: str, kind: str, inputs: dict, compute, *args, pause=None):
     """``compute(*args)`` memoised on disk under a hash of ``inputs``
     and of the oracle's and this file's code. A miss computes in a
-    spawned child process, with ``pause`` (a context manager, e.g. the
+    child process, with ``pause`` (a context manager, e.g. the
     memory sampler's) held around it."""
     import contextlib
-    import multiprocessing
-    from concurrent.futures import ProcessPoolExecutor
 
     os.makedirs(cache_dir, exist_ok=True)
     h = digest({"inputs": inputs, "code": _code_digest()})[:32]
@@ -72,15 +70,33 @@ def cached(cache_dir: str, kind: str, inputs: dict, compute, *args, pause=None):
     if os.path.exists(path):
         with open(path, "rb") as f:
             return pickle.load(f)
-    with pause or contextlib.nullcontext(), ProcessPoolExecutor(
-        1, mp_context=multiprocessing.get_context("spawn")
-    ) as pool:
-        val = pool.submit(compute, *args).result()
+    with pause or contextlib.nullcontext():
+        val = _in_child(compute, args)
     tmp = path + ".tmp"
     with open(tmp, "wb") as f:
         pickle.dump(val, f)
     os.replace(tmp, path)
     return val
+
+
+def _in_child(compute, args):
+    """``compute(*args)`` in a fresh Python process that runs this file,
+    waited for before returning. A plain child rather than a
+    multiprocessing pool, which would leave its resource tracker running
+    after the benchmark exits."""
+    import subprocess
+    import sys
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as d:
+        src, dst = os.path.join(d, "in.pkl"), os.path.join(d, "out.pkl")
+        with open(src, "wb") as f:
+            pickle.dump((compute, args), f)
+        # the child's stdout goes to stderr: the result line stays last
+        subprocess.run([sys.executable, os.path.abspath(__file__), src, dst],
+                       check=True, stdout=sys.stderr)
+        with open(dst, "rb") as f:
+            return pickle.load(f)
 
 
 def read_doc_store_texts(path: str) -> dict[int, str]:
@@ -279,3 +295,13 @@ def same_frame(got, want) -> bool:
         elif a[c].tolist() != b[c].tolist():
             return False
     return True
+
+
+if __name__ == "__main__":
+    import sys
+
+    with open(sys.argv[1], "rb") as f:
+        fn, fn_args = pickle.load(f)
+    result = fn(*fn_args)
+    with open(sys.argv[2], "wb") as f:
+        pickle.dump(result, f)

@@ -23,8 +23,10 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
+import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -101,16 +103,60 @@ def _launcher_env(ctx: Ctx) -> None:
     sys.path[:0] = [ROOT, HERE]
 
 
+def _alive(pid: int, start: str) -> bool:
+    """``pid`` is still the process that started at ``start`` and has
+    not ended."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return False
+    return fields[19] == start and fields[0] != "Z"
+
+
+def _wait_gone(procs: dict[int, str], timeout: float) -> dict[int, str]:
+    """Wait until every process in ``procs`` has ended or ``timeout``
+    passed; returns those still alive."""
+    deadline = time.monotonic() + timeout
+    while True:
+        procs = {p: s for p, s in procs.items() if _alive(p, s)}
+        if not procs or time.monotonic() > deadline:
+            return procs
+        time.sleep(0.05)
+
+
+def _stop_all(spark) -> None:
+    """Stop the session, then wait until every process started under
+    this one (JVM, Python daemon and workers, oracle child) has ended;
+    kill what is still there after 30 s."""
+    from spans import proc_tree
+
+    me = os.getpid()
+    procs = {p: f[19] for p, (_, f) in proc_tree().items() if p != me}
+    try:
+        _stop_spark(spark)
+    finally:
+        left = _wait_gone(procs, 30)
+        for p in left:
+            try:
+                os.kill(p, signal.SIGKILL)
+            except OSError:
+                pass
+        _wait_gone(left, 30)
+
+
 def _stop_spark(spark) -> None:
-    """Stop the session and wait for the JVM (and with it the Python
-    workers) to exit."""
-    if spark is None:
-        return
+    """Stop the session and wait for the JVM to exit. Without a session
+    (set-up failed before it returned) a JVM that was started is stopped
+    all the same."""
     from pyspark import SparkContext
 
     gw = SparkContext._gateway
     proc = getattr(gw, "proc", None)
-    spark.stop()
+    if spark is not None:
+        spark.stop()
+    elif SparkContext._active_spark_context is not None:
+        SparkContext._active_spark_context.stop()
     if gw is not None:
         gw.shutdown()
     if proc is not None:
@@ -190,6 +236,7 @@ def per_layer(ctx: Ctx, run, tracer, counters: dict, names) -> tuple[dict, dict]
     m["engine.batch_exec_s"] = per("engine.batch_exec", "client.query_batch")
     if run.throughput:
         m["engine.batch_qps"] = statistics.median(run.throughput)
+    m["client.op_wall_s"] = run.op_wall_s()
     # the write phase: one realtime round after the read window
     m["engine.staged_plan_s"] = per("engine.staged_plan", "client.query", WRITE)
     m["engine.staged_exec_s"] = per("engine.staged_exec", "client.query", WRITE)
@@ -314,7 +361,7 @@ def main(argv=None) -> int:
         try:
             run = workloads.WORKLOADS[args.workload](ctx)
         finally:
-            _stop_spark(ctx.spark)
+            _stop_all(ctx.spark)
 
     units = declared_metrics()["per_layer" if ctx.trace else "end_to_end"]
     if ctx.trace:
@@ -334,6 +381,7 @@ def main(argv=None) -> int:
         "metrics": metrics, "setup_s": run.setup_s, "e2e": run.e2e(),
         "python_peak_mb": mem.peak_bytes / 1e6, "jvm_live_mb": ctx.jvm_bytes / 1e6,
         "rounds_s": run.rounds,
+        "round_cpu_s": run.round_cpu,
         "throughput_per_s": run.throughput,
         "peak_mem_parts_mb": {k: v / 1e6 for k, v in mem.peak_parts.items()},
         "host": ctx.host, "steal_gate": ctx.steal_gate, "extra": run.extra,

@@ -9,12 +9,14 @@ previous one returned.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import statistics
 import time
 
 import check
 import inputs
+from spans import tree_cpu_s
 
 # input sizes (smoke mode shrinks them so a run finishes in seconds)
 SIZES = {
@@ -34,12 +36,13 @@ INDEX = "pb"
 
 class Run:
     """What a workload reports back: set-up wall, per-round operation
-    walls, batch throughput, and how many operations it attempted and
-    got wrong."""
+    walls and CPU, batch throughput, and how many operations it
+    attempted and got wrong."""
 
     def __init__(self):
         self.setup_s = 0.0
         self.rounds: list[list[float]] = []
+        self.round_cpu: list[float] = []  # CPU seconds per operation, per round
         self.throughput: list[float] = []  # queries per second, per batch
         self.attempted = 0
         self.failed = 0
@@ -51,12 +54,25 @@ class Run:
         if len(self.errors) < 20:
             self.errors.append(what)
 
+    @contextlib.contextmanager
+    def round(self):
+        """One round of the mix (every operation kind once): yields the
+        list its operation walls go into, and records the CPU seconds
+        the process tree spent per operation of the round."""
+        walls: list[float] = []
+        c0 = tree_cpu_s()
+        yield walls
+        self.round_cpu.append((tree_cpu_s() - c0) / len(walls))
+        self.rounds.append(walls)
+
     def e2e(self) -> dict:
-        """op_p50_s: median over the window's rounds of the mean
-        operation latency in the round (a round holds every operation
-        kind of the mix once; a window holds one round or more)."""
-        rounds = [statistics.mean(r) for r in self.rounds if r]
-        return {"op_p50_s": statistics.median(rounds) if rounds else 0.0}
+        """op_cpu_s: median over the window's rounds of the CPU seconds
+        per operation (a window holds one round or more)."""
+        return {"op_cpu_s": statistics.median(self.round_cpu)}
+
+    def op_wall_s(self) -> float:
+        """Median over the window's rounds of the mean operation wall."""
+        return statistics.median(statistics.mean(r) for r in self.rounds)
 
 
 def _session(ctx):
@@ -190,7 +206,8 @@ def serve(ctx) -> Run:
 
     run, sz, tracer = Run(), ctx.sizes["serve"], ctx.tracer
     singles = inputs.serve_queries(ctx.seed, sz["singles"])
-    batch = inputs.batch_queries(ctx.seed, sz["batch"])
+    # /query_batch traffic feeds only per-layer metrics: traced runs only
+    batch = inputs.batch_queries(ctx.seed, sz["batch"]) if ctx.trace else []
     hl = {"field": "text", "width": 30}
 
     t0 = time.perf_counter()
@@ -205,14 +222,18 @@ def serve(ctx) -> Run:
         # on point queries (the setting bench.py's query phase uses)
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         srv, thread, client = _serve_http(spark, path)
-        # warm-up: one single request and one batch (not measured,
-        # answers checked with the window's)
+        # warm-up: one single request (not measured, answer checked
+        # with the window's)
         cls0, q0, dt0 = singles[0]
         got_singles = [(0, cls0, _request(ctx, run, "client.query", lambda: client.query(
             INDEX, q0, top_k=10, default_type=dt0, highlight=hl))[1])]
-        got_batches = [_request(ctx, run, "client.query_batch",
-                                lambda: client.query_batch(INDEX, batch, top_k=10))[1]]
     run.setup_s = time.perf_counter() - t0
+    got_batches = []
+    if batch:  # warm-up batch, outside set-up so both kinds of run time the same set-up
+        with tracer.span("run.batch_warmup"):
+            got_batches.append(_request(
+                ctx, run, "client.query_batch",
+                lambda: client.query_batch(INDEX, batch, top_k=10))[1])
 
     texts = check.read_doc_store_texts(os.path.join(path, "doc_store"))
     want = check.cached(
@@ -221,22 +242,23 @@ def serve(ctx) -> Run:
         _serve_answers, texts, singles, batch, pause=ctx.mem.paused(),
     )
     # rounds of one request per query class, so every round has the
-    # same composition; then batches for the rest of the window
+    # same composition; then, in a traced run, batches for the rest of
+    # the window
     n_cls = len(inputs.SERVE_CLASSES)
 
     def window(w0):
         run.extra["rows_returned"] = 0
-        while len(run.rounds) < 2 or time.perf_counter() - w0 < 0.7 * ctx.seconds:
-            run.rounds.append([])
-            for _ in range(n_cls):
-                j = len(got_singles) % len(singles)
-                cls, q, dt = singles[j]
-                wall, resp = _request(ctx, run, "client.query", lambda: client.query(
-                    INDEX, q, top_k=10, default_type=dt, highlight=hl), cls=cls)
-                run.rounds[-1].append(wall)
-                got_singles.append((j, cls, resp))
-                run.extra["rows_returned"] += len((resp or {}).get("results", []))
-        while not run.throughput or time.perf_counter() - w0 < ctx.seconds:
+        while not run.rounds or time.perf_counter() - w0 < 0.7 * ctx.seconds:
+            with run.round() as walls:
+                for _ in range(n_cls):
+                    j = len(got_singles) % len(singles)
+                    cls, q, dt = singles[j]
+                    wall, resp = _request(ctx, run, "client.query", lambda: client.query(
+                        INDEX, q, top_k=10, default_type=dt, highlight=hl), cls=cls)
+                    walls.append(wall)
+                    got_singles.append((j, cls, resp))
+                    run.extra["rows_returned"] += len((resp or {}).get("results", []))
+        while batch and (not run.throughput or time.perf_counter() - w0 < ctx.seconds):
             wall, resp = _request(ctx, run, "client.query_batch",
                                   lambda: client.query_batch(INDEX, batch, top_k=10))
             run.throughput.append(len(batch) / wall)
@@ -417,9 +439,9 @@ def operators(ctx) -> Run:
     )
 
     def window(w0):
-        while len(run.rounds) < 2 or time.perf_counter() - w0 < ctx.seconds:
-            run.rounds.append([])
-            one_pass(got, run.rounds[-1])
+        while not run.rounds or time.perf_counter() - w0 < ctx.seconds:
+            with run.round() as walls:
+                one_pass(got, walls)
 
     _measure(ctx, run, window)
 
